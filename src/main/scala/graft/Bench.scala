@@ -142,7 +142,7 @@ object Bench {
       if (errors.isEmpty) ""
       else errors.reverse.map("\"" + _ + "\"").mkString(",\"errors\":[", ",", "]")
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s"""$rawJson,"passes":$nPasses,"sf":"$sfDir"$errJson}"""
+      s"""$rawJson,"passes":$nPasses,"sf":"$sfDir","jvm_args":${Engine.jvmArgsJson}$errJson}"""
     println(json)
     // Also write the artifact to a file directly: stdout scraping truncates
     // long lines (round-5 lesson: BENCH_r05's per-query map was cut at 2000

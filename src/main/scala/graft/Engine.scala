@@ -71,6 +71,31 @@ object Engine {
     else base
   }
 
+  /** A JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** This JVM's input arguments as a JSON array — every run artifact
+    * (Bench, Verify, ScaleBench) records them, so flags injected through
+    * SPARK_GRAFT_JAVA_OPTS show in the run's own output.
+    */
+  def jvmArgsJson: String = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .map(jsonString).mkString("[", ",", "]")
+  }
+
   /** Local session, used by tests and ad-hoc runs. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val s = configure(SparkSession.builder().master(master), shufflePartitions).getOrCreate()

@@ -4106,19 +4106,25 @@ object MiningQueries {
         // log-likelihood RATIO of a target-domain LM to a raw-corpus
         // LM and keep the top slice — the published recipe for
         // steering a web-scale crawl toward a trusted domain without
-        // training a classifier. Feature model = the q163 production
-        // shape instantiated TWICE over ONE shared per-doc distinct-
-        // bigram frame (map-side native GramRunCounts, derived once,
-        // not persisted — the q163 recompute-over-cache trade): the
-        // TARGET LM trained on the en slice (q163's trusted-slice
-        // convention), the RAW LM on the whole corpus, both pruned
-        // (minPair=2, minCtx=2) and BROADCAST, so each scoring pass is
-        // two map-side hash joins and the corpus never shuffles for
-        // scoring; both models stay count-threshold-capped at any
-        // corpus size. Importance weight per doc, exact Q16 fixed
-        // point: w_fp = xent_raw_fp - xent_target_fp (positive = the
-        // doc is better explained by the target LM than by the raw
-        // mixture — more target-like than the corpus average).
+        // training a classifier. Feature model: q163's pruned bigram LM
+        // (minPair=2, minCtx=2), twice — the TARGET LM on the en slice
+        // (q163's trusted-slice convention) and the RAW LM on the whole
+        // corpus — built as ONE joint model (BigramLm.trainJoint) from
+        // one shared per-doc distinct-bigram frame (map-side native
+        // GramRunCounts, derived twice and never persisted — the q163
+        // recompute-over-cache trade). The joint trainer runs one
+        // per-pair aggregation for both models and reads both
+        // vocabulary sizes to the driver in one one-row aggregate;
+        // scoring (BigramLm.scoreJoint) is one pass over the gram frame
+        // with two broadcast hash joins (pair and context tables, one
+        // column per model) and one groupBy, so the corpus never
+        // shuffles for scoring. Each model's bits equal a separate
+        // BigramLm.train/score (the LlmOpsSpec joint-model law), and a
+        // corpus without en bigrams is refused on the driver. Importance
+        // weight per doc, exact Q16 fixed point: w_fp = xent_raw_fp -
+        // xent_target_fp (positive = the doc is better explained by the
+        // target LM than by the raw mixture — more target-like than the
+        // corpus average).
         // Selection = global top-100 by (w_fp DESC, doc_id ASC) via
         // orderBy+limit, which Spark plans as TakeOrderedAndProject:
         // per-partition partial top-k then a k-row driver merge, never
@@ -4133,32 +4139,13 @@ object MiningQueries {
         // unscoreable under both models and excluded from n_scored and
         // selection alike (the q159/q163 xd coverage).
         val pc = docBigramCounts(s, d)
-        // round-13: the un-persisted pc frame (recompute-over-cache, see
-        // helper doc) was re-derived FOUR times — two train aggregations
-        // + two scoring passes. ONE corpus aggregation now yields BOTH
-        // training count sets (raw = all langs, target = the en slice;
-        // per-(w1,w2) lang-sliced sums are exactly what the two separate
-        // train() aggregations computed, and train()'s own re-agg over
-        // the vocab²-bounded frame is a no-op numerically), and ONE
-        // scoring pass evaluates both models side by side
-        // (BigramLm.scoreMany — bit-identical per model by construction,
-        // and the old tx⋈rx re-join disappears with it). pc passes:
-        // 4 -> 2; the recompute-over-cache trade itself is unchanged.
-        val combined = pc.groupBy(col("w1"), col("w2"))
-          .agg(sum(col("c")).as("c_raw"),
-            sum(when(col("lang") === "en", col("c")).otherwise(lit(0L))).as("c_tgt"))
-          .localCheckpoint(true)
-        val tgt = BigramLm.train(
-          combined.where(col("c_tgt") > 0)
-            .select(col("w1"), col("w2"), col("c_tgt").as("c")),
-          Some("c"), minPair = 2L, minCtx = 2L)
-        val raw = BigramLm.train(
-          combined.select(col("w1"), col("w2"), col("c_raw").as("c")),
-          Some("c"), minPair = 2L, minCtx = 2L)
-        val w = BigramLm.scoreMany(pc, Seq("doc_id", "lang"),
-            Seq("t_fp" -> tgt, "r_fp" -> raw), "c", broadcastLm = true)
+        val lm = BigramLm.trainJoint(
+          pc.select(col("w1"), col("w2"),
+            when(col("lang") === "en", col("c")).as("c_target"), col("c").as("c_raw")),
+          Seq("target", "raw"), minPair = 2L, minCtx = 2L)
+        val w = BigramLm.scoreJoint(pc, Seq("doc_id", "lang"), lm, "c")
           .select(col("doc_id"), col("lang"),
-            (col("r_fp") - col("t_fp")).as("w_fp"))
+            (col("raw") - col("target")).as("w_fp"))
           .localCheckpoint(true)
         val sel = w.orderBy(col("w_fp").desc, col("doc_id").asc).limit(100)
         val base = w.groupBy(col("lang")).agg(count(lit(1)).as("n_scored"))
@@ -4175,9 +4162,10 @@ object MiningQueries {
       Some(DsirSelectionOracleSql),
       "DSIR data selection (Xie et al. 2023): importance weight = " +
         "xent under the raw-corpus LM minus xent under the en-slice " +
-        "target LM (exact Q16 bits, two pruned broadcast q163-shape " +
-        "models over one shared gram frame), global top-100 docs via " +
-        "distributed TakeOrderedAndProject, per-lang selection card; " +
+        "target LM (exact Q16 bits, two pruned q163-shape models trained " +
+        "and scored as one joint model over one shared gram frame), " +
+        "global top-100 docs via distributed TakeOrderedAndProject, " +
+        "per-lang selection card; " +
         "oracle replays both LM programs over one shared log2 frame"))
 
   /** q163/q180's shared feature frame: per-doc DISTINCT bigram counts

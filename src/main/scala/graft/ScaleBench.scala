@@ -828,7 +828,8 @@ object ScaleBench {
       "},\"probes_r30\":{" + r30Json + "},\"forced_loop\":{" + forcedJson +
       "},\"skew\":{" + skewJson +
       "},\"streaming\":{" + streamingJson +
-      "},\"skew_split_marked\":" + skewSplitMarked + "}"
+      "},\"skew_split_marked\":" + skewSplitMarked +
+      ",\"jvm_args\":" + Engine.jvmArgsJson + "}"
     println(json)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "BENCH_scale_r11.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

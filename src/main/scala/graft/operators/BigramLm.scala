@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
   * [[log2Frame]] shape), and per-token bits sum exactly, so document
   * scores are bit-identical at any parallelism AND across the two
   * evaluation strategies — the parity law is in PropertySpec.
+  *
+  * Two shapes share that arithmetic. [[train]]/[[score]] build and apply
+  * ONE model (q159/q162/q163, the streaming gate). [[trainJoint]]/
+  * [[scoreJoint]] build SEVERAL models from one shared count frame and
+  * score them in one pass (DSIR's target and raw LMs, q180): each
+  * model's bits are exactly what [[train]]/[[score]] would give it.
   */
 object BigramLm {
 
@@ -149,49 +155,6 @@ object BigramLm {
     * shuffle. Only safe when the model is vocab-capped; the full exact
     * model's tables grow with the trusted slice and stay AQE-decided.
     */
-  /** Per-key cross-entropy under SEVERAL trained LMs in ONE pass over
-    * the pairs frame — the DSIR shape (q180: target vs raw importance
-    * ratio), where calling [[score]] once per model re-derives and
-    * re-aggregates the corpus-sized pairs frame per model. Each model
-    * contributes its own left joins (same keys as [[score]]); the
-    * single groupBy then evaluates every model's
-    * `sum(bits·c) div sum(c)` side by side — each output column is
-    * bit-identical to the corresponding [[score]] call by construction
-    * (same joins, same coalesce, same integer arithmetic, integer sums
-    * commute). Output: keyCols ++ one `<name>` Q16 column per model.
-    * Only offered for the weighted (pre-counted) form — that is the
-    * only caller shape that needs it.
-    */
-  def scoreMany(pairs: DataFrame, keyCols: Seq[String], lms: Seq[(String, Lm)],
-      weightCol: String, broadcastLm: Boolean = false): DataFrame = {
-    require(lms.nonEmpty, "scoreMany needs at least one model")
-    // the model names are interpolated into the aggregate's expr() SQL
-    // below — a name that is not a plain identifier would break parsing
-    // (or worse); refuse it loudly (ADVICE r13)
-    lms.foreach { case (name, _) =>
-      require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
-        s"scoreMany model name must be a plain SQL identifier, got '$name'")
-    }
-    def bc(df: DataFrame): DataFrame = if (broadcastLm) broadcast(df) else df
-    val joined = lms.foldLeft(pairs.withColumn("__k", lit(1))) {
-      case (df, (name, lm)) =>
-        df.join(bc(lm.pairBits.select(col("w1"), col("w2"),
-            col("pb").as(s"__pb_$name"))), Seq("w1", "w2"), "left")
-          .join(bc(lm.ctxBits.select(col("w1"),
-            col("den_fp").as(s"__den_$name"))), Seq("w1"), "left")
-          .join(broadcast(lm.unk.select(col("__k"),
-            col("unk_fp").as(s"__unk_$name"))), Seq("__k"))
-    }
-    val aggs = lms.map { case (name, _) =>
-      expr(s"sum((coalesce(__pb_$name, __den_$name, __unk_$name)) * __c) div sum(__c)")
-        .as(name)
-    }
-    joined
-      .withColumn("__c", col(weightCol))
-      .groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
   def score(pairs: DataFrame, keyCols: Seq[String], lm: Lm,
       weightCol: Option[String] = None, broadcastLm: Boolean = false): DataFrame = {
     val pbT = if (broadcastLm) broadcast(lm.pairBits) else lm.pairBits
@@ -213,5 +176,90 @@ object BigramLm {
           col(w).as("__c")): _*)
         .groupBy(keyCols.map(col): _*)
         .agg(expr("sum(bits * __c) div sum(__c)").as("xent_fp")))
+  }
+
+  /** Several pruned LMs trained from one count frame: `pairBits` is
+    * (w1, w2, pb_<model>…), `ctxBits` is (w1, den_<model>…) — Q16 bits,
+    * a null meaning the model pruned (or never saw) that pair or
+    * context — and `unk` each model's unseen-context cost, computed on
+    * the driver. Both tables keep only rows some model retains.
+    */
+  final case class JointLm(pairBits: DataFrame, ctxBits: DataFrame, unk: Seq[(String, Long)])
+
+  /** Train one add-one bigram LM per name in `models` from a shared
+    * (w1, w2, c_<model>…) frame of pre-counted rows — the frame may hold
+    * several rows per pair (they are summed), and a null or non-positive
+    * c_<model> means the row is not in that model's training slice. Each
+    * model equals [[train]] (weightCol "c") on its own slice with the
+    * same `minPair`/`minCtx`: c1 and V come from the model's full
+    * counts, pruning only drops rows.
+    *
+    * One per-pair aggregation serves every model (persisted: it feeds
+    * V, the contexts and the pairs). Every model's V comes from one
+    * one-row aggregate read to the driver, so the unseen-context cost
+    * and each context's smoothing term are literals — no constant-key
+    * joins. A model with an empty slice is refused: its V is 0 and
+    * log2(V) is undefined.
+    */
+  def trainJoint(counts: DataFrame, models: Seq[String],
+      minPair: Long = 1L, minCtx: Long = 1L): JointLm = {
+    require(models.nonEmpty, "trainJoint needs at least one model")
+    // the names are interpolated into scoreJoint's aggregate SQL
+    models.foreach(m => require(m.matches("[A-Za-z_][A-Za-z0-9_]*"),
+      s"joint LM model name must be a plain SQL identifier, got '$m'"))
+    val l2 = graft.functions.UnigramExprs.log2fp _
+    def c(m: String) = col(s"c_$m")
+    val pairSums = models.map(m => sum(when(c(m) > 0, c(m))).as(s"c_$m"))
+    val c2 = counts.groupBy(col("w1"), col("w2"))
+      .agg(pairSums.head, pairSums.tail: _*)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // V per model: distinct words of the pairs that model counts
+    val seen = models.map(m => max(when(c(m).isNotNull, 1L).otherwise(0L)).as(m))
+    val vRow = c2.select(explode(array(col("w1"), col("w2"))).as("w") +: models.map(c): _*)
+      .groupBy(col("w")).agg(seen.head, seen.tail: _*)
+      .agg(sum(col(models.head)), models.tail.map(m => sum(col(m))): _*)
+      .head()
+    val v = models.zipWithIndex.map { case (m, i) =>
+      val n = if (vRow.isNullAt(i)) 0L else vRow.getLong(i)
+      require(n > 0L, s"joint LM model '$m' has an empty training slice " +
+        s"(no pair with c_$m > 0): its vocabulary V is 0 and log2(V) is undefined")
+      m -> n
+    }
+    val ctxSums = models.map(m => sum(c(m)).as(s"__c1_$m"))
+    val ctxBits = c2.groupBy(col("w1"))
+      .agg(ctxSums.head, ctxSums.tail: _*)
+      .select(col("w1") +: v.map { case (m, n) =>
+        when(col(s"__c1_$m") >= minCtx, l2(col(s"__c1_$m") + lit(n))).as(s"den_$m")
+      }: _*)
+      .where(models.map(m => col(s"den_$m").isNotNull).reduce(_ || _))
+    // the inner context join doubles as context pruning, as in [[train]]
+    val pairBits = c2.join(broadcast(ctxBits), Seq("w1"))
+      .select(col("w1") +: col("w2") +: models.map(m =>
+        when(c(m) >= minPair, col(s"den_$m") - l2(c(m) + lit(1L))).as(s"pb_$m")): _*)
+      .where(models.map(m => col(s"pb_$m").isNotNull).reduce(_ || _))
+    JointLm(pairBits, ctxBits,
+      v.map { case (m, n) => m -> graft.functions.UnigramRuntime.log2fp(n) })
+  }
+
+  /** Per-key cross-entropy under every model of a [[JointLm]], in one
+    * pass over PRE-COUNTED (key…, w1, w2, `weightCol`) rows: two
+    * broadcast hash joins and one groupBy. Per model, bits are
+    * coalesce(pair, context default, unseen-context cost) and the score
+    * is sum(bits·c) div sum(c) — bit-identical to [[score]] with that
+    * model and the same weight column. Output: keyCols ++ one Q16
+    * `<model>` column per model. Both tables are broadcast: the joint
+    * shape serves pruned, vocab-capped models (see [[train]]).
+    */
+  def scoreJoint(pairs: DataFrame, keyCols: Seq[String], lm: JointLm,
+      weightCol: String): DataFrame = {
+    val aggs = lm.unk.map { case (m, unk) =>
+      expr(s"sum(coalesce(pb_$m, den_$m, ${unk}L) * __c) div sum(__c)").as(m)
+    }
+    pairs
+      .join(broadcast(lm.pairBits), Seq("w1", "w2"), "left")
+      .join(broadcast(lm.ctxBits), Seq("w1"), "left")
+      .withColumn("__c", col(weightCol))
+      .groupBy(keyCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
   }
 }

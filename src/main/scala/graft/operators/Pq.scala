@@ -313,8 +313,9 @@ object Pq {
     //    aggregation exchange disappear (guide §1.2-2, §2.3, §2.4).
     //
     // Fixed-point entries are the identical expression in both branches
-    // (round(d2·2^20) as long), so scores are bit-identical across the
-    // regimes — PlanSpec pins the equality.
+    // (round(d2·2^20) as long), and both drop a code missing from the
+    // books, so scores are bit-identical across the regimes — the
+    // PropertySpec regime law pins it on books with dropped codes.
     if (broadcastTables) {
       val table = qres
         .select(col("__pid"), col("centroid_id"),
@@ -359,15 +360,17 @@ object Pq {
       encP
         .join(lut, Seq("centroid_id"))
         .where(col("__pid") =!= col("id"))
+        // m integer lookups per candidate; a code missing from a
+        // (refined) book has no entry and is dropped, exactly the inner
+        // join's dropped-term semantics — and a candidate with NO
+        // matched code emits no pair, as the join emits no row for it
         .select(col("__pid").as("probe_id"), col("id").as("neighbor_id"),
-          // m integer lookups per candidate — a code missing from a
-          // (refined) book contributes 0, exactly the inner join's
-          // dropped-term semantics
-          aggregate(col("__sc"), lit(0L), (acc, e) =>
-            acc + coalesce(
-              element_at(element_at(col("__lut"), e.getField("subspace") + lit(1)),
-                e.getField("code")),
-              lit(0L))).as("adist_fp"))
+          filter(transform(col("__sc"), e =>
+            element_at(element_at(col("__lut"), e.getField("subspace") + lit(1)),
+              e.getField("code"))), _.isNotNull).as("__hit"))
+        .where(size(col("__hit")) > 0)
+        .select(col("probe_id"), col("neighbor_id"),
+          aggregate(col("__hit"), lit(0L), (acc, x) => acc + x).as("adist_fp"))
     }
   }
 

@@ -391,10 +391,16 @@ private[graft] object BatchIndex {
     val dirs = batchDirIds(spark, indexPath)
       .filter(id => id < beforeBatch && bound.forall(id > _))
       .map(id => s"$indexPath/batch=$id")
+    // basePath: batch dirs may themselves be partitioned (the band tree's
+    // `__bp`), and two or more of them read as separate roots fail
+    // partition discovery (CONFLICTING_DIRECTORY_STRUCTURES) — read them
+    // under the index root and drop the discovered `batch` column, as
+    // StreamingIvf.committedIndex does
     val parts =
       runs.map(r => spark.read.schema(template.schema).parquet(r.dir)) ++
       (if (dirs.nonEmpty)
-        Seq(spark.read.schema(template.schema).parquet(dirs: _*)) else Nil)
+        Seq(spark.read.schema(template.schema).option("basePath", indexPath)
+          .parquet(dirs: _*).drop("batch")) else Nil)
     if (parts.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[Row](), template.schema)
     else parts.reduce(_ unionByName _)

@@ -1420,4 +1420,91 @@ class LlmOpsSpec extends SparkSpec {
     assert(en._4 > 1000000L * 100 / 500,
       s"en sel_ppm ${en._4} not above the uniform-selection rate")
   }
+
+  test("law: BigramLm joint model == two independent train/score calls (per-model pruning)") {
+    // hand-built pre-counted pairs where the TARGET (en) model prunes
+    // what the RAW model keeps: target context x has c1 = 1 (pruned),
+    // target pair (a, c) has c2 = 1 (pruned, falls back to den_a); raw
+    // keeps both, and prunes q and zz, which the target never saw
+    val pc = Seq(
+      (1L, "en", "a", "b", 2L), (1L, "en", "a", "c", 1L),
+      (2L, "en", "x", "y", 1L), (2L, "en", "a", "b", 1L),
+      (3L, "de", "x", "y", 3L), (3L, "de", "a", "c", 2L), (3L, "de", "q", "r", 1L),
+      (4L, "fr", "zz", "a", 1L), (4L, "fr", "a", "zz", 1L), (4L, "fr", "b", "q", 2L))
+      .toDF("doc_id", "lang", "w1", "w2", "c")
+    val joint = BigramLm.trainJoint(
+      pc.select(col("w1"), col("w2"),
+        when(col("lang") === "en", col("c")).as("c_target"), col("c").as("c_raw")),
+      Seq("target", "raw"), minPair = 2L, minCtx = 2L)
+    val single = Map(
+      "target" -> BigramLm.train(pc.where(col("lang") === "en"), Some("c"), 2L, 2L),
+      "raw" -> BigramLm.train(pc, Some("c"), 2L, 2L))
+    single.foreach { case (m, lm) =>
+      val pb = joint.pairBits.where(col(s"pb_$m").isNotNull)
+        .select("w1", "w2", s"pb_$m").as[(String, String, Long)].collect().toSet
+      assert(pb === lm.pairBits.select("w1", "w2", "pb").as[(String, String, Long)].collect().toSet, m)
+      val den = joint.ctxBits.where(col(s"den_$m").isNotNull)
+        .select("w1", s"den_$m").as[(String, Long)].collect().toSet
+      assert(den === lm.ctxBits.select("w1", "den_fp").as[(String, Long)].collect().toSet, m)
+      assert(joint.unk.toMap.apply(m) === lm.unk.select("unk_fp").as[Long].collect().head, m)
+    }
+    // the fixture really exercises per-model pruning
+    assert(single("target").ctxBits.where(col("w1") === "x").count() === 0L)
+    assert(single("raw").ctxBits.where(col("w1") === "x").count() === 1L)
+    assert(single("target").pairBits.where(col("w1") === "a" && col("w2") === "c").count() === 0L)
+    val got = BigramLm.scoreJoint(pc, Seq("doc_id", "lang"), joint, "c")
+      .select("doc_id", "target", "raw").as[(Long, Long, Long)].collect().toSet
+    def xent(m: String) = BigramLm.score(pc, Seq("doc_id", "lang"), single(m), Some("c"),
+        broadcastLm = true)
+      .select("doc_id", "xent_fp").as[(Long, Long)].collect().toMap
+    val (t, r) = (xent("target"), xent("raw"))
+    assert(got === t.keySet.map(d => (d, t(d), r(d))))
+    assert(got.size === 4)
+  }
+
+  test("q180 refuses a corpus with an empty target (en) slice on the driver") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q180_noen").toString
+    Tables.documents(spark, "/root/testdata/sf0.001")
+      .withColumn("lang", when(col("lang") === "en", lit("xx")).otherwise(col("lang")))
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queries("q180_dsir_selection")(spark, dir)
+    }
+    assert(e.getMessage.contains("model 'target' has an empty training slice"), e.getMessage)
+  }
+
+  test("q180 runs in at most 20 Spark jobs at sf0.001 (construction + full materialization)") {
+    // the joint LM's budget: one per-pair aggregation, one one-row V
+    // read, one scoring pass, then the selection/report; the two
+    // separately-trained models took 44 jobs
+    val sc = spark.sparkContext
+    val groups = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.synchronized {
+          groups += Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("q180-jobs", "q180 job budget", interruptOnCancel = false)
+      try SparkEntry.queries("q180_dsir_selection")(spark, "/root/testdata/sf0.001")
+          .write.format("noop").mode("overwrite").save()
+      finally sc.clearJobGroup()
+      // drain the listener bus: it delivers in order, so once a marker
+      // job's start arrived every q180 job's start has too
+      sc.setJobGroup("q180-drain", "drain", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.synchronized(groups.contains("q180-drain")) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      val n = groups.synchronized(groups.count(_ == "q180-jobs"))
+      assert(groups.synchronized(groups.contains("q180-drain")), "listener bus did not drain")
+      assert(n > 0 && n <= 20, s"q180 ran $n Spark jobs, budget 20")
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.catalog.clearCache()
+    }
+  }
 }

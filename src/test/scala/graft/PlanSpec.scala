@@ -636,8 +636,9 @@ class PlanSpec extends SparkSpec {
     // partition Exchange under a Limit would move the whole per-doc
     // weight frame through one task at corpus scale. (The visible plan
     // starts at the localCheckpoint'd weight frame — exactly the stage
-    // this pin is about; the scoring stage below the checkpoint is
-    // q163's shape and is plan-audited through q163.)
+    // this pin is about; the joint-LM scoring stage below the checkpoint
+    // is two broadcast HASH joins and one groupBy, with no constant-key
+    // attach.)
     val plan = SparkEntry.queries("q180_dsir_selection")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
@@ -677,8 +678,9 @@ class PlanSpec extends SparkSpec {
       "q174_filtered_recall" -> "exact filtered-truth baseline: probes broadcast by design (the q24 shape) + centroid codebook scoring (k rows) broadcast (the q42 assignment shape)")
     // q180 needs NO entry: its localCheckpoint truncates the visible
     // plan to the post-checkpoint selection/report stage, which must be
-    // (and is) BNLJ-free; its pre-checkpoint scoring stage is the q163
-    // shape, guard-inspected through q163's own (checkpoint-free) plan
+    // (and is) BNLJ-free; its pre-checkpoint joint-LM scoring stage has
+    // only equi-key broadcast hash joins (the unseen-context costs are
+    // literals, not a constant-key 1-row attach)
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val plan = fn(spark, sf).queryExecution.executedPlan.toString
       val bad = plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct")

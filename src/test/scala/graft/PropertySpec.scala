@@ -885,6 +885,40 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("law: Pq.adcScoresResidual regimes agree on refined books with dropped codes") {
+    // refined books can lose codes; a candidate whose codes are ALL
+    // missing must get no pair in either regime (the broadcast join
+    // emits none), never a best-possible adist_fp of 0 in the packed one
+    val g: Gen[List[Seq[Double]]] = Gen.listOfN(16,
+      Gen.listOfN(4, Gen.choose(-8, 8).map(_.toDouble)).map(_.toSeq))
+    samples(g, 3).foreach { vs =>
+      val vecs = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+      val m = 2; val dims = 4
+      val cents = Ivf.centroids(vecs, "id", "v", stride = 8, refine = 0)
+      val asg = Ivf.assign(vecs, "id", "v", cents, id = "rid")
+      val res = Pq.residualFrame(vecs, "id", "v", asg, cents, "rid")
+      val refined = Pq.refineCodebooks(res, "rid", "__res",
+        Pq.codebooks(res, "rid", "__res", m, dims, stride = 4), m, dims, rounds = 1)
+      val enc = Pq.encode(res, "rid", "__res", refined, m, dims)
+        .select(col("id"), col("subspace"), col("code"))
+        .join(asg.withColumnRenamed("rid", "id"), Seq("id"))
+        .localCheckpoint(true)
+      // drop every code of the first encoded vector from the books
+      val victim = enc.agg(min(col("id"))).as[Long].collect().head
+      val books = refined.join(
+        enc.where(col("id") === victim).select(col("subspace"), col("code")),
+        Seq("subspace", "code"), "left_anti")
+      def scores(bt: Boolean): Set[(Long, Long, Long)] =
+        Pq.adcScoresResidual(enc, vecs, "id", "v", cents, books, m, dims,
+            broadcastTables = bt)
+          .as[(Long, Long, Long)].collect().toSet
+      val serving = scores(bt = true)
+      assert(serving.nonEmpty)
+      assert(!serving.exists(_._2 == victim), s"vector $victim has no book code left")
+      assert(scores(bt = false) === serving)
+    }
+  }
+
   test("law: CountMin estimate of a never-seen key is the min of its collided buckets (0 if clean)") {
     val words = (1 to 5).map(i => s"seen$i").flatMap(w => Seq.fill(10)(w))
     val grid = CountMin.sketch(words.toDF("w"), "w", 4096)

@@ -855,6 +855,43 @@ class StreamingSpec extends SparkSpec {
     assert(oneShot === Set(1L, 3L, 4L, 12L))
   }
 
+  test("StreamingDedup: a third and fourth batch read every uncompacted batch dir of the band tree") {
+    // the band tree's batch dirs are partitioned (batch=<i>/__bp=<b>):
+    // from the third batch on, the accepted-band read spans two or more
+    // of them, which must resolve as one partitioned table under the
+    // index root (no compaction runs in between)
+    implicit val sqlCtx = spark.sqlContext
+    val idx = java.nio.file.Files.createTempDirectory("graft_sdedup3").toString + "/index"
+    def doc(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+    val input = MemoryStream[(Long, String)]
+    val accepted = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = graft.streaming.StreamingDedup.run(
+        input.toDS().toDF("doc_id", "text"), "doc_id", "text", idx) { (survivors, _) =>
+        accepted.synchronized {
+          accepted ++= survivors.select("doc_id").as[Long].collect()
+          ()
+        }
+      }
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft_sdedup3_ckpt").toString)
+      .trigger(Trigger.ProcessingTime(0L)).start()
+    try {
+      input.addData((1L, doc("a", 40)))
+      q.processAllAvailable()
+      input.addData((2L, doc("b", 40)))
+      q.processAllAvailable()
+      // batch 3: a near-dup of batch 1's doc and a near-dup of batch 2's
+      // doc — both found only through the two stored batch dirs
+      input.addData((3L, doc("a", 39) + " a999"), (4L, doc("b", 39) + " b999"),
+        (5L, doc("c", 40)))
+      q.processAllAvailable()
+      input.addData((6L, doc("c", 39) + " c999"), (7L, doc("d", 40)))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+      assert(accepted.synchronized(accepted.toSet) === Set(1L, 2L, 5L, 7L))
+    } finally q.stop()
+  }
+
   test("StreamingIvf: streamed per-batch index == one-shot topK; candidate fetch partition-prunes") {
     // incremental ANN ingest (the embedding analogue of StreamingDedup):
     // a fixed coarse quantizer assigns each micro-batch map-side; the
