@@ -72,9 +72,8 @@ object Engine {
   }
 
   /** A JSON string literal: backslash, quote, and ALL control chars
-    * (<0x20) escaped — a tab or CR in builder-authored SQL would
-    * otherwise make the driver's json.load fail and silently zero the
-    * round's correctness.
+    * (<0x20) escaped — a tab or CR in an oracle's SQL would otherwise
+    * make the oracle compare's json.load fail.
     */
   def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
